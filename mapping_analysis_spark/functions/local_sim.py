@@ -7,7 +7,9 @@ locally agree bit-for-bit."""
 
 from __future__ import annotations
 
+import math
 import re
+from decimal import ROUND_HALF_UP, Decimal
 
 _PUNCT_RE = re.compile(r"[!-/:-@\[-`{-~]")  # Java \p{Punct} = ASCII punct
 _WS_RE = re.compile(r"\s+")
@@ -28,9 +30,21 @@ def trigram_set_local(s: str) -> frozenset[str]:
 
 
 def round_half_up(x: float, scale: int) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
     return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP))
+
+
+def round6_half_up(x: float) -> float:
+    """Tie-guarded fast HALF_UP at 6dp: floor(x·1e6 + 0.5), except within
+    1e-6 of the .5 boundary, where the Decimal(repr(x)) kernel decides —
+    value-identical to ``round_half_up(x, 6)`` and to Spark's / DuckDB's
+    half-up ``round``. Python's ``round`` is half-to-even, so a 6dp
+    midpoint would otherwise round differently on the two sides of an
+    oracle compare, or flip a pair at a ``>= threshold`` filter. Same
+    guard as the block scorer's vectorized ``round_half_up_vec6``."""
+    y = x * 1e6
+    if abs(y - math.floor(y) - 0.5) < 1e-6:
+        return round_half_up(x, 6)
+    return math.floor(y + 0.5) / 1e6
 
 
 def cosine_trigram_local(a: str | None, b: str | None) -> float | None:
@@ -45,16 +59,12 @@ def cosine_trigram_local(a: str | None, b: str | None) -> float | None:
     if not sa or not sb:
         return 0.0
     inter = len(sa & sb)
-    import math
-
     return round_half_up(inter / math.sqrt(len(sa) * len(sb)), 6)
 
 
 def cosine_vec_local(a, b) -> float | None:
     """Cosine over two numeric vectors (fingerprints); None if either
     missing/zero."""
-    import math
-
     if a is None or b is None:
         return None
     dot = sum(x * y for x, y in zip(a, b))
@@ -70,8 +80,6 @@ def haversine_m_local(
 ) -> float:
     """Haversine meters, R = 6371 km — same formula shape as
     functions.similarity.haversine_m (GeoDistance.java:20-46)."""
-    import math
-
     dlat = math.radians(lat2 - lat1)
     dlon = math.radians(lon2 - lon1)
     a = math.sin(dlat / 2) * math.sin(dlat / 2) + math.cos(

@@ -35,6 +35,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .local_sim import round6_half_up
 from .text import padded_trigrams, simplify
 
 # ---------------------------------------------------------------------------
@@ -375,30 +376,12 @@ def jaro_winkler_py(
     return jaro + prefix * prefix_scale * (1 - jaro)
 
 
-def _round6_half_up(x: float) -> float:
-    """Tie-guarded HALF_UP at 6dp. Python ``round`` is half-to-EVEN while
-    both Spark's ``F.round`` and DuckDB's ``round`` are half-up (half away
-    from zero; all sims here are ≥ 0), so a value landing on a 6dp midpoint
-    would round differently on the two sides of the oracle compare — and a
-    midpoint ON the ≥ 0.5 filter boundary would flip the pair set too. Same
-    kernel as the block scorer's ``round_half_up_vec6`` fast path, with the
-    Decimal fallback near the .5 tie."""
-    import math
-
-    from .local_sim import round_half_up
-
-    y = x * 1e6
-    if abs(y - math.floor(y) - 0.5) < 1e-6:
-        return round_half_up(x, 6)
-    return math.floor(y + 0.5) / 1e6
-
-
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler(left: pd.Series, right: pd.Series) -> pd.Series:
     out = [
         None
         if pd.isna(a) or pd.isna(b)
-        else _round6_half_up(jaro_winkler_py(a, b))
+        else round6_half_up(jaro_winkler_py(a, b))
         for a, b in zip(left, right)
     ]
     return pd.Series(out, dtype="float64")

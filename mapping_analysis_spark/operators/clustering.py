@@ -1,41 +1,28 @@
-"""Iterative MAX_BOTH clustering — the engine's distributed clustering core.
+"""Decompose-then-merge clustering — the engine's distributed clustering core.
 
 Re-creates the reference's agglomerative clustering semantics (the delta-
 iteration merge, merge/MergeExecution.java:139-297, and the incremental
-MAX_BOTH path, clusterstrategies/SourceAdditionClustering.java:62-191) as a
-driver loop of fully distributed DataFrame rounds:
+MAX_BOTH path, clusterstrategies/SourceAdditionClustering.java:62-191) as
+two fully distributed stages:
 
-  round: candidate pairs between current clusters (blocked, salted,
-         source-overlap + max-source restrictions
+  decomposition: candidate pairs between current clusters (blocked,
+         salted, ∪ LSH; source-overlap + max-source restrictions
          — CheckRestrictionsFilterFunction.java:27-50)
        → pair similarity (trigram cosine + optional MFCC cosine, mean-agg)
        → threshold ≥ min_sim
-       → MAX_BOTH reciprocal-best selection (MaxBothSelection.java:27-82)
-       → merge each matched pair: min id survives, union members, OR source
-         masks, keep the longer label, member-weighted mean fingerprint
-         (DualMergeMusicMapper.java:22-129)
-       → repeat until no pair survives.
+       → best-link filter (BasicLinkFilterFunction.java:46-79)
+       → connected components = merge groups
+  merge: per group, the exact local greedy fixpoint — merge the max-sim
+         pair: min id survives, union members, OR source masks, keep the
+         longer label, member-weighted mean fingerprint
+         (DualMergeMusicMapper.java:22-129) — until no pair survives.
 
-A cluster of k duplicates converges in ≤ ⌈log2 k⌉ + slack rounds (each
-round halves the cluster count along reciprocal-best chains); k ≤ #sources
-(duplicate-free sources), so ~3-4 rounds at 5 sources. Every round is a
-constant number of shuffles — no per-key Python fixpoint, so a hot blocking
-key never serializes onto one core (contrast: merge.merge_execution runs
-the exact greedy order per block for parity testing; this operator is the
-scale path).
-
-Difference vs the reference's greedy order: the reference merges ONE best
-pair per blocking key per superstep (DeltaIterateMergeMusicStepFunction
-.java:104-131); MAX_BOTH merges every reciprocal-best pair concurrently.
-Reciprocal-best pairs are exactly the pairs the greedy order would pick
-first within their neighborhoods, so results differ only on ties across
-overlapping neighborhoods — the reference itself ships MAX_BOTH as its
-recommended incremental selection (published F1 0.9336 baseline uses it).
+Every stage is a constant number of shuffles — no driver rounds and no
+per-key Python fixpoint over an unbounded group, so a hot blocking key
+never serializes onto one core.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -45,42 +32,30 @@ from ..functions.similarity import (
     mean_agg_sim,
     trigram_set,
 )
-from .blocking import salted_block_pairs
-from .incremental import max_both_selection
+from ..functions.text import music_blocking_label
+from ..pipeline import BLOCKING_LENGTH, PipelineConfig
+from ..util import materialize, parallel_grouped
 
-
-@dataclass
-class ClusterRoundConfig:
-    min_sim: float = 0.7
-    max_sources: int = 5
-    max_block_rows: int = 256
-    use_audio: bool = True
-    max_rounds: int = 8
-    # round-0 LSH candidate union: catches pairs whose prefix blocking keys
-    # diverged (typo in the first chars, dropped first token — the recall
-    # gap of pure prefix blocking; the reference offers LSH_BLOCKING as an
-    # alternative strategy, we run it as a complement). 12 bands × 4 rows
-    # puts the banding s-curve midpoint at (1/12)^(1/4) ≈ 0.54 Jaccard —
-    # generous recall for true pairs whose blocking prefix diverged (a
-    # dropped first token leaves J ≈ 0.6-0.8); the extra low-J candidates
-    # are cheap because pair scoring is a single narrow materialized pass
-    use_lsh_round0: bool = True
-    lsh_bands: int = 12
-    lsh_rows_per_band: int = 4
-    lsh_seed: int = 42
-    # guardrail: candidate components larger than this fall back to
-    # (component × prefix-blocking-key) sub-grouping — a chain of borderline
-    # candidate edges (e.g. spuriously-similar fingerprints) must never
-    # produce an unbounded quadratic merge group
-    max_component_rows: int = 512
-    # best-link selection BEFORE connected components (the reference's
-    # BasicLinkFilter, BasicLinkFilterFunction.java:46-79): keep only the
-    # max-sim link per (cluster, neighbor-source-set). Without it, hot
-    # artists chain thousands of above-threshold borderline pairs into one
-    # giant component (measured: 16k rows of a 35k corpus in ONE cc) whose
-    # CC convergence and merge grouping serialize; with it, components are
-    # bounded near the true cluster size
-    use_link_filter: bool = True
+# salting threshold: blocks above this many rows are split into salt cells,
+# bounding any pair-scoring task at ~MAX_BLOCK_ROWS² work
+MAX_BLOCK_ROWS = 256
+# guardrail: candidate components larger than this fall back to
+# (component × prefix-blocking-key) sub-grouping — a chain of borderline
+# candidate edges (e.g. spuriously-similar fingerprints) must never
+# produce an unbounded quadratic merge group
+MAX_COMPONENT_ROWS = 512
+# LSH candidate union: catches pairs whose prefix blocking keys diverged
+# (typo in the first chars, dropped first token — the recall gap of pure
+# prefix blocking; the reference offers LSH_BLOCKING as an alternative
+# strategy, we run it as a complement). 12 bands × 4 rows puts the banding
+# s-curve midpoint at (1/12)^(1/4) ≈ 0.54 Jaccard — generous recall for
+# true pairs whose blocking prefix diverged (a dropped first token leaves
+# J ≈ 0.6-0.8); the extra low-J candidates are cheap because pair scoring
+# is a single narrow materialized pass. The streaming engine's band-key
+# state index uses the same banding.
+LSH_BANDS = 12
+LSH_ROWS_PER_BAND = 4
+LSH_SEED = 42
 
 
 def _cluster_state(prepared: DataFrame, use_audio: bool) -> DataFrame:
@@ -101,13 +76,11 @@ def _cluster_state(prepared: DataFrame, use_audio: bool) -> DataFrame:
 
 
 def _round_pairs(
-    clusters: DataFrame,
-    cfg: ClusterRoundConfig,
-    extra_pair_ids: DataFrame | None = None,
+    clusters: DataFrame, cfg: PipelineConfig, lsh_pair_ids: DataFrame
 ) -> DataFrame:
     """Candidate pairs between current clusters with restrictions.
-    ``extra_pair_ids`` (src, dst) — e.g. LSH candidates — are unioned in,
-    then the pair set is deduplicated.
+    ``lsh_pair_ids`` (src, dst) are unioned in, then the pair set is
+    deduplicated.
 
     Scale shape (each step measured on a 35k-clip / 13.9M-candidate run):
 
@@ -124,8 +97,6 @@ def _round_pairs(
        candidate (this was the single hottest spot of the whole pipeline).
     4. Payloads are joined back only for the ~1% surviving pairs.
     """
-    from ..util import materialize
-
     payload = ["members", "sources_mask", "label", "trigram_set", "n_members"]
     use_audio = cfg.use_audio and "fingerprint" in clusters.columns
     if use_audio:
@@ -150,10 +121,6 @@ def _round_pairs(
     if use_audio:
         hashed_cols.append("fingerprint")
     hashed = clusters.select(*hashed_cols)
-    import os
-    import time
-
-    _t = time.time()
     # One block-local pass scores BOTH channels (round 5): the trigram
     # cosine is the cheap channel and bounds the reachable agg_sim — with
     # mean aggregation over two channels, a pair needs sim_text ≥
@@ -175,7 +142,7 @@ def _round_pairs(
         id_col="id",
         tokens_col="_tg",
         mask_col="sources_mask",
-        max_block_rows=cfg.max_block_rows,
+        max_block_rows=MAX_BLOCK_ROWS,
         max_sources=cfg.max_sources,
         emit_min=text_bound,
         fp_col="fingerprint" if use_audio else None,
@@ -191,59 +158,55 @@ def _round_pairs(
                 F.col("sim_audio")
             ),
         )
-    if extra_pair_ids is not None:
-        # LSH extras are few (≈ one per banded record); join the arrays
-        # back by id for them only, then dedupe on the NARROW rows (a pair
-        # can surface both blocked and via LSH; sims are BIT-identical —
-        # the text twin is pinned by test, the audio twin delegates to the
-        # same fp_cosine_grid kernel — so dropDuplicates is deterministic).
-        side_cols = ["id", "_tg"] + (["fingerprint"] if use_audio else [])
-        tg_side = hashed.select(*side_cols)
-        lsh_scored = (
-            extra_pair_ids.select("src", "dst")
-            .join(
-                tg_side.select(
-                    F.col("id").alias("src"),
-                    F.col("_tg").alias("_stg"),
-                    *([F.col("fingerprint").alias("_sfp")] if use_audio else []),
-                ),
-                "src",
-            )
-            .join(
-                tg_side.select(
-                    F.col("id").alias("dst"),
-                    F.col("_tg").alias("_dtg"),
-                    *([F.col("fingerprint").alias("_dfp")] if use_audio else []),
-                ),
-                "dst",
-            )
-            .select(
-                "src",
-                "dst",
-                cosine_trigram_from_sets(F.col("_stg"), F.col("_dtg")).alias(
-                    "sim_text"
-                ),
-                *(
-                    [fp_pair_cosine(F.col("_sfp"), F.col("_dfp")).alias("sim_audio")]
-                    if use_audio
-                    else []
-                ),
-            )
+    # LSH extras are few (≈ one per banded record); join the arrays
+    # back by id for them only, then dedupe on the NARROW rows (a pair
+    # can surface both blocked and via LSH; sims are BIT-identical —
+    # the text twin is pinned by test, the audio twin delegates to the
+    # same fp_cosine_grid kernel — so dropDuplicates is deterministic).
+    side_cols = ["id", "_tg"] + (["fingerprint"] if use_audio else [])
+    tg_side = hashed.select(*side_cols)
+    lsh_scored = (
+        lsh_pair_ids.select("src", "dst")
+        .join(
+            tg_side.select(
+                F.col("id").alias("src"),
+                F.col("_tg").alias("_stg"),
+                *([F.col("fingerprint").alias("_sfp")] if use_audio else []),
+            ),
+            "src",
         )
-        if use_audio:
-            lsh_scored = lsh_scored.withColumn(
-                "sim_audio",
-                F.when(F.isnan("sim_audio"), F.lit(None)).otherwise(
-                    F.col("sim_audio")
-                ),
-            )
-        blocked_scored = blocked_scored.unionByName(lsh_scored).dropDuplicates(
-            ["src", "dst"]
+        .join(
+            tg_side.select(
+                F.col("id").alias("dst"),
+                F.col("_tg").alias("_dtg"),
+                *([F.col("fingerprint").alias("_dfp")] if use_audio else []),
+            ),
+            "dst",
         )
+        .select(
+            "src",
+            "dst",
+            cosine_trigram_from_sets(F.col("_stg"), F.col("_dtg")).alias(
+                "sim_text"
+            ),
+            *(
+                [fp_pair_cosine(F.col("_sfp"), F.col("_dfp")).alias("sim_audio")]
+                if use_audio
+                else []
+            ),
+        )
+    )
+    if use_audio:
+        lsh_scored = lsh_scored.withColumn(
+            "sim_audio",
+            F.when(F.isnan("sim_audio"), F.lit(None)).otherwise(
+                F.col("sim_audio")
+            ),
+        )
+    blocked_scored = blocked_scored.unionByName(lsh_scored).dropDuplicates(
+        ["src", "dst"]
+    )
     narrow = materialize(blocked_scored)
-    if os.environ.get("SPARK_GRAFT_DEBUG_BATCH"):
-        print(f"[rounds] score-pairs-narrow: {time.time() - _t:.1f}s", flush=True)
-    _t = time.time()
     if use_audio:
         # LSH extras skipped the emit_min bound — apply it here (blocked
         # rows already cleared it; null sim_text = no-vote passes through)
@@ -286,59 +249,7 @@ def _round_pairs(
     )
 
 
-def _merge_matches(clusters: DataFrame, matches: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
-    """Apply one round of pair merges to the cluster state.
-
-    ``matches`` carries both sides' payloads (src_* / dst_*) from the pair
-    join, so the merge is a pure projection — no join back to state needed
-    for the merged rows; untouched rows survive via anti-join.
-    """
-    touched = matches.select(F.col("src").alias("id")).unionByName(
-        matches.select(F.col("dst").alias("id"))
-    )
-    untouched = clusters.join(touched, "id", "left_anti")
-    longer = F.length(F.col("src_label")) >= F.length(F.col("dst_label"))
-    fused_label = F.when(longer, F.col("src_label")).otherwise(F.col("dst_label"))
-    merged_cols = [
-        # canonical pairs have src < dst → min id survives (DualMergeMusicMapper keeps min)
-        F.col("src").alias("id"),
-        F.sort_array(F.concat(F.col("src_members"), F.col("dst_members"))).alias(
-            "members"
-        ),
-        F.col("src_sources_mask")
-        .bitwiseOR(F.col("dst_sources_mask"))
-        .alias("sources_mask"),
-        fused_label.alias("label"),
-        F.col("blocking_key"),
-        trigram_set(fused_label).alias("trigram_set"),
-        (F.col("src_n_members") + F.col("dst_n_members")).alias("n_members"),
-    ]
-    if cfg.use_audio and "src_fingerprint" in matches.columns:
-        merged_cols.append(
-            F.when(
-                F.col("src_fingerprint").isNull(), F.col("dst_fingerprint")
-            )
-            .when(F.col("dst_fingerprint").isNull(), F.col("src_fingerprint"))
-            .otherwise(
-                F.zip_with(
-                    F.col("src_fingerprint"),
-                    F.col("dst_fingerprint"),
-                    lambda a, b: (
-                        (
-                            a.cast("double") * F.col("src_n_members")
-                            + b.cast("double") * F.col("dst_n_members")
-                        )
-                        / (F.col("src_n_members") + F.col("dst_n_members"))
-                    ).cast("float"),
-                )
-            )
-            .alias("fingerprint")
-        )
-    merged = matches.select(*merged_cols)
-    return untouched.unionByName(merged)
-
-
-def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
+def candidate_components(state: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Decomposition pass (the reference's DefaultPreprocessing →
     ConnectedComponentIdAdder chain, preprocessing/DefaultPreprocessing
     .java:39-60): candidate pairs = blocked pairs ∪ LSH pairs, sim ≥
@@ -348,73 +259,53 @@ def candidate_components(state: DataFrame, cfg: ClusterRoundConfig) -> DataFrame
     above-threshold candidates is clusterable with its peers even when
     their prefix blocking keys diverged (the recall limit of pure prefix
     blocking)."""
-    extra = None
-    if cfg.use_lsh_round0:
-        from .blocking import lsh_pairs
+    from .blocking import lsh_pairs
 
-        extra = lsh_pairs(
-            state,
-            trigram_col="trigram_set",
-            id_col="id",
-            bands=cfg.lsh_bands,
-            rows_per_band=cfg.lsh_rows_per_band,
-            seed=cfg.lsh_seed,
-        )
-    import os
-    import time
-
-    _dbg = os.environ.get("SPARK_GRAFT_DEBUG_BATCH")
-    _t = time.time()
-    pairs = _round_pairs(state, cfg, extra_pair_ids=extra)
-    if _dbg:
-        # attribution barrier only (debug runs): split the audio-scoring /
-        # payload-join cost of _round_pairs from the link filter + CC below
-        from ..util import materialize
-
-        pairs = materialize(pairs)
-        print(f"[rounds]   pairs-scored: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
-    if cfg.use_link_filter:
-        # BasicLinkFilter (BasicLinkFilterFunction.java:46-79): an edge
-        # survives only if it is the max-sim link of its src towards dst's
-        # source set AND of its dst towards src's source set; ties by
-        # (src asc, dst asc). Keeps every true-duplicate link (a record's
-        # best match per source IS its duplicate) while cutting the
-        # borderline cross-cluster edges that chain components together.
-        order = [F.desc("agg_sim"), F.asc("src"), F.asc("dst")]
-        w_src = Window.partitionBy("src", "dst_sources_mask").orderBy(*order)
-        w_dst = Window.partitionBy("dst", "src_sources_mask").orderBy(*order)
-        pairs = (
-            pairs.withColumn("_r1", F.row_number().over(w_src))
-            .withColumn("_r2", F.row_number().over(w_dst))
-            .filter((F.col("_r1") == 1) & (F.col("_r2") == 1))
-        )
+    lsh = lsh_pairs(
+        state,
+        trigram_col="trigram_set",
+        id_col="id",
+        bands=LSH_BANDS,
+        rows_per_band=LSH_ROWS_PER_BAND,
+        seed=LSH_SEED,
+    )
+    pairs = _round_pairs(state, cfg, lsh)
+    # BasicLinkFilter (BasicLinkFilterFunction.java:46-79): an edge
+    # survives only if it is the max-sim link of its src towards dst's
+    # source set AND of its dst towards src's source set; ties by
+    # (src asc, dst asc). Keeps every true-duplicate link (a record's
+    # best match per source IS its duplicate) while cutting the
+    # borderline cross-cluster edges that chain components together.
+    # Without it, hot artists chain thousands of above-threshold
+    # borderline pairs into one giant component (measured: 16k rows of a
+    # 35k corpus in ONE cc) whose CC convergence and merge grouping
+    # serialize; with it, components are bounded near the true cluster
+    # size.
+    order = [F.desc("agg_sim"), F.asc("src"), F.asc("dst")]
+    w_src = Window.partitionBy("src", "dst_sources_mask").orderBy(*order)
+    w_dst = Window.partitionBy("dst", "src_sources_mask").orderBy(*order)
+    pairs = (
+        pairs.withColumn("_r1", F.row_number().over(w_src))
+        .withColumn("_r2", F.row_number().over(w_dst))
+        .filter((F.col("_r1") == 1) & (F.col("_r2") == 1))
+    )
     from .graph import connected_components
 
-    if _dbg:
-        pairs = materialize(pairs.select("src", "dst"))
-        _seg = "link-filter" if cfg.use_link_filter else "pairs-project"
-        print(f"[rounds]   {_seg}: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
-    out = connected_components(
+    return connected_components(
         pairs.select("src", "dst"),
         vertices=state.select("id"),
         id_col="id",
         cc_col="cc",
     )
-    if _dbg:
-        out = materialize(out)
-        print(f"[rounds]   cc: {time.time() - _t:.1f}s", flush=True)
-    return out
 
 
-def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
+def merge_components(clusters: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """One-shot merge: per component group, run the exact local greedy
     fixpoint (DeltaIterateMergeMusicStepFunction.java:45-163 semantics —
     max-sim pair first, ties min small id / min big id, source-overlap and
     max-source restrictions, attribute + fingerprint fusion).
 
-    The decomposition guardrail caps groups at max_component_rows, so the
+    The decomposition guardrail caps groups at MAX_COMPONENT_ROWS, so the
     local O(n²) solve is bounded; the whole merge phase costs exactly ONE
     shuffle (groupBy blocking_key) — no driver rounds. This is the same
     trade the reference makes: its delta iteration confines every superstep
@@ -426,9 +317,7 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
 
     from ..functions.local_sim import (
         _INSANE,
-        cosine_vec_local,
-        mean_agg_local,
-        round_half_up,
+        round6_half_up,
         simplify_local,
         trigram_set_local,
     )
@@ -453,16 +342,6 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
             return None
         return trigram_set_local(simplify_local(label))
 
-    def _round6(x: float) -> float:
-        # tie-guarded fast HALF_UP: floor(x·1e6 + 0.5) except within 1e-6
-        # of the .5 boundary, where the Decimal(repr(x)) kernel decides —
-        # value-identical to local_sim.round_half_up (same guard as the
-        # vectorized block scorer)
-        y = x * 1e6
-        if abs(y - math.floor(y) - 0.5) < 1e-6:
-            return round_half_up(x, 6)
-        return math.floor(y + 0.5) / 1e6
-
     audio_text_bound = 2.0 * threshold - 1.0 - 1e-6
 
     def sim_fn(a: dict, b: dict) -> float | None:
@@ -477,7 +356,7 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
             st = 0.0
         else:
             inter = len(sa_ & sb_)
-            st = _round6(inter / math.sqrt(len(sa_) * len(sb_)))
+            st = round6_half_up(inter / math.sqrt(len(sa_) * len(sb_)))
         if not use_audio:
             return st
         if st is not None and st < audio_text_bound:
@@ -492,14 +371,14 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
             for x_, y_ in zip(fa, fb):
                 dot += x_ * y_
             nrm = a["_fpn"] * b["_fpn"]
-            au = _round6(dot / nrm) if nrm > 0 else None
+            au = round6_half_up(dot / nrm) if nrm > 0 else None
         if st is None and au is None:
             return None
         if st is None:
             return au
         if au is None:
             return st
-        return _round6((st + au) / 2.0)
+        return round6_half_up((st + au) / 2.0)
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
         import heapq
@@ -589,8 +468,6 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
         )
 
     keep_cols = [f.name for f in fields]
-    from ..util import parallel_grouped
-
     return (
         parallel_grouped(clusters.select(*keep_cols), "blocking_key")
         .groupBy("blocking_key")
@@ -598,9 +475,7 @@ def merge_components(clusters: DataFrame, cfg: ClusterRoundConfig) -> DataFrame:
     )
 
 
-def cluster_rounds(
-    state: DataFrame, cfg: ClusterRoundConfig | None = None
-) -> DataFrame:
+def cluster_rounds(state: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Cluster an existing cluster-state DataFrame (id, members,
     sources_mask, label, blocking_key, trigram_set, n_members
     [, fingerprint]).
@@ -609,23 +484,11 @@ def cluster_rounds(
     above-threshold pairs (size-capped), the grouping within which merging
     happens. Stage 2 (merge): per-component local greedy fixpoint — one
     shuffle. The returned state's ``blocking_key`` is restored to the
-    prefix key of the fused label (so streaming re-keying stays stable),
-    and ``trigram_set`` is recomputed from the fused label."""
-    import os
-    import time
-
-    from ..util import materialize
-
-    cfg = cfg or ClusterRoundConfig()
-    _dbg = os.environ.get("SPARK_GRAFT_DEBUG_BATCH")
-    _t = time.time()
+    prefix key of the fused label (the same key ``pipeline.prepare``
+    derives, so streaming re-keying stays stable), and ``trigram_set`` is
+    recomputed from the fused label."""
     clusters = materialize(state)
-    if _dbg:
-        print(f"[rounds] input-materialize: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
     cc = candidate_components(clusters, cfg)
-    if _dbg:
-        print(f"[rounds] pairs+link-filter+cc: {time.time() - _t:.1f}s", flush=True)
     sizes = cc.groupBy("cc").agg(F.count(F.lit(1)).alias("_cc_n"))
     clusters = (
         clusters.join(cc, "id")
@@ -633,7 +496,7 @@ def cluster_rounds(
         .withColumn(
             "blocking_key",
             F.when(
-                F.col("_cc_n") <= cfg.max_component_rows,
+                F.col("_cc_n") <= MAX_COMPONENT_ROWS,
                 F.col("cc").cast("string"),
             ).otherwise(
                 F.concat_ws("|", F.col("cc").cast("string"), F.col("blocking_key"))
@@ -658,112 +521,7 @@ def cluster_rounds(
     ]
     singletons = clusters.filter(F.col("_cc_n") == 1).select(*keep_cols)
     multi = clusters.filter(F.col("_cc_n") > 1).drop("cc", "_cc_n")
-    if _dbg:
-        _t = time.time()
-        singletons = materialize(singletons)
-        multi = materialize(multi)
-        print(
-            f"[rounds] component-split: {time.time() - _t:.1f}s "
-            f"(multi {multi.count()}, single {singletons.count()})",
-            flush=True,
-        )
-        _t = time.time()
-    merged = merge_components(multi, cfg)
-    if _dbg:
-        merged = materialize(merged)
-        print(f"[rounds] merge-groups: {time.time() - _t:.1f}s", flush=True)
-        _t = time.time()
-    merged = merged.unionByName(singletons)
-    from ..functions.text import music_blocking_label
-
-    out = merged.withColumn(
-        "blocking_key", music_blocking_label(F.col("label"), 4)
+    merged = merge_components(multi, cfg).unionByName(singletons)
+    return merged.withColumn(
+        "blocking_key", music_blocking_label(F.col("label"), BLOCKING_LENGTH)
     ).withColumn("trigram_set", trigram_set(F.col("label")))
-    if _dbg:
-        # attribution barrier only: materialize the merged state so the
-        # merge phase's cost is visible separately from representatives
-        _t = time.time()
-        out = materialize(out)
-        print(f"[rounds] fuse-keys: {time.time() - _t:.1f}s", flush=True)
-    return out
-
-
-def distributed_merge_rounds(
-    state: DataFrame, cfg: ClusterRoundConfig | None = None
-) -> DataFrame:
-    """Alternative merge phase for UNCAPPED giant groups: iterative
-    reciprocal-best (MAX_BOTH) rounds, every round a fixed number of
-    shuffles (see module docstring). Used when merge groups can exceed
-    what a single task should hold; the default path (merge_components)
-    assumes the decomposition cap."""
-    from ..util import materialize
-
-    cfg = cfg or ClusterRoundConfig()
-    clusters = materialize(state)
-    # round 0 may union LSH candidates per the caller's config; rounds ≥ 1
-    # re-pair within blocking_key groups only (the workset), so the override
-    # below disables LSH there while `lsh_round0` keeps the caller's intent
-    lsh_round0 = cfg.use_lsh_round0
-    cfg = ClusterRoundConfig(**{**cfg.__dict__, "use_lsh_round0": False})
-    # Work-set pruning: any block holding a pair ≥ min_sim always yields at
-    # least one reciprocal-best match (the block's global max pair is
-    # reciprocal-best by definition), so a block with NO match this round
-    # can never match again — its clusters leave the iteration for good.
-    # This shrinks the per-round shuffles to the still-active blocks only
-    # (the delta-iteration workset semantics of MergeExecution.java:170-181).
-    finished: list = []
-    for rnd in range(cfg.max_rounds):
-        extra = None
-        if rnd == 0 and lsh_round0:
-            from .blocking import lsh_pairs
-
-            extra = lsh_pairs(
-                clusters,
-                trigram_col="trigram_set",
-                id_col="id",
-                bands=cfg.lsh_bands,
-                rows_per_band=cfg.lsh_rows_per_band,
-                seed=cfg.lsh_seed,
-            )
-        matches = materialize(
-            max_both_selection(
-                _round_pairs(clusters, cfg, extra_pair_ids=extra),
-                sim_col="agg_sim",
-            )
-        )
-        if matches.isEmpty():
-            break
-        # key set is usually small after round 1; AQE broadcasts it when so.
-        # A cluster leaves the workset iff its block is inactive AND it was
-        # not itself matched (an LSH cross-block match can pull a cluster
-        # out of an otherwise-inactive block).
-        active_keys = matches.select("blocking_key").distinct()
-        matched_ids = (
-            matches.select(F.col("src").alias("id"))
-            .unionByName(matches.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        inactive = clusters.join(active_keys, "blocking_key", "left_anti")
-        finished.append(inactive.join(matched_ids, "id", "left_anti"))
-        working = clusters.join(
-            active_keys, "blocking_key", "left_semi"
-        ).unionByName(inactive.join(matched_ids, "id", "left_semi"))
-        # fresh path per round: `finished` parts keep referencing earlier
-        # rounds' materialized state (rounds are bounded by max_rounds)
-        clusters = materialize(_merge_matches(working, matches, cfg))
-    for part in finished:
-        clusters = clusters.unionByName(part)
-    # restore a content-derived blocking key (component ids are run-local)
-    from ..functions.text import music_blocking_label
-
-    return clusters.withColumn(
-        "blocking_key", music_blocking_label(F.col("label"), 4)
-    )
-
-
-def iterative_max_both_clustering(
-    prepared: DataFrame, cfg: ClusterRoundConfig | None = None
-) -> DataFrame:
-    """Cluster prepared records end-to-end (see ``cluster_rounds``)."""
-    cfg = cfg or ClusterRoundConfig()
-    return cluster_rounds(_cluster_state(prepared, cfg.use_audio), cfg)

@@ -21,6 +21,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.similarity import (
+    cosine_trigram_from_sets,
+    mean_agg_sim,
+    trigram_set,
+)
+
 
 def max_both_selection(pairs: DataFrame, sim_col: str = "agg_sim") -> DataFrame:
     """Reciprocal-best selection (MaxBothSelection.java:27-82).
@@ -134,6 +140,60 @@ def hungarian_match_block(pdf: pd.DataFrame, min_sim: float) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["src", "dst", "agg_sim"])
 
 
+def _merge_matches(
+    clusters: DataFrame, matches: DataFrame, use_audio: bool
+) -> DataFrame:
+    """Apply one round of pair merges to the cluster state.
+
+    ``matches`` carries both sides' payloads (src_* / dst_*) from the pair
+    join, so the merge is a pure projection — no join back to state needed
+    for the merged rows; untouched rows survive via anti-join.
+    """
+    touched = matches.select(F.col("src").alias("id")).unionByName(
+        matches.select(F.col("dst").alias("id"))
+    )
+    untouched = clusters.join(touched, "id", "left_anti")
+    longer = F.length(F.col("src_label")) >= F.length(F.col("dst_label"))
+    fused_label = F.when(longer, F.col("src_label")).otherwise(F.col("dst_label"))
+    merged_cols = [
+        # canonical pairs have src < dst → min id survives (DualMergeMusicMapper keeps min)
+        F.col("src").alias("id"),
+        F.sort_array(F.concat(F.col("src_members"), F.col("dst_members"))).alias(
+            "members"
+        ),
+        F.col("src_sources_mask")
+        .bitwiseOR(F.col("dst_sources_mask"))
+        .alias("sources_mask"),
+        fused_label.alias("label"),
+        F.col("blocking_key"),
+        trigram_set(fused_label).alias("trigram_set"),
+        (F.col("src_n_members") + F.col("dst_n_members")).alias("n_members"),
+    ]
+    if use_audio and "src_fingerprint" in matches.columns:
+        merged_cols.append(
+            F.when(
+                F.col("src_fingerprint").isNull(), F.col("dst_fingerprint")
+            )
+            .when(F.col("dst_fingerprint").isNull(), F.col("src_fingerprint"))
+            .otherwise(
+                F.zip_with(
+                    F.col("src_fingerprint"),
+                    F.col("dst_fingerprint"),
+                    lambda a, b: (
+                        (
+                            a.cast("double") * F.col("src_n_members")
+                            + b.cast("double") * F.col("dst_n_members")
+                        )
+                        / (F.col("src_n_members") + F.col("dst_n_members"))
+                    ).cast("float"),
+                )
+            )
+            .alias("fingerprint")
+        )
+    merged = matches.select(*merged_cols)
+    return untouched.unionByName(merged)
+
+
 def source_addition_clustering(
     state: DataFrame,
     arrivals: DataFrame,
@@ -157,8 +217,6 @@ def source_addition_clustering(
     selection pass per added source; repeated addition = repeated calls.
     """
     from ..functions.audio import fingerprint_cosine
-    from ..functions.similarity import cosine_trigram_from_sets, mean_agg_sim
-    from .clustering import ClusterRoundConfig, _merge_matches
 
     use_audio = "fingerprint" in state.columns and "fingerprint" in arrivals.columns
     payload = ["members", "sources_mask", "label", "trigram_set", "n_members"]
@@ -244,11 +302,7 @@ def source_addition_clustering(
         )
     else:
         chosen = max_both_selection(scored, sim_col="agg_sim")
-    rcfg = ClusterRoundConfig(
-        min_sim=min_sim, max_sources=max_sources, use_audio=use_audio
-    )
-    merged = _merge_matches(both.drop("_side"), chosen, rcfg)
-    return merged
+    return _merge_matches(both.drop("_side"), chosen, use_audio)
 
 
 def hungarian_selection(

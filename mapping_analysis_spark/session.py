@@ -13,6 +13,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_memory(mem_total_kb: int | None = None) -> tuple[str, str]:
+    """Default (heap, off-heap) sizes for the local-mode JVM: a fifth of
+    the host's RAM for the heap, capped at 64g, and a sixteenth off-heap,
+    capped at 32g (large hosts keep the caps; a small host no longer grows
+    a JVM past its RAM). ``mem_total_kb`` defaults to ``/proc/meminfo``
+    ``MemTotal``; where that is unreadable the caps apply."""
+    if mem_total_kb is None:
+        try:
+            with open("/proc/meminfo") as f:
+                mem_total_kb = next(
+                    int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+                )
+        except (OSError, StopIteration, ValueError):
+            return "64g", "32g"
+    mem_mb = mem_total_kb // 1024
+    return f"{min(64 * 1024, mem_mb // 5)}m", f"{min(32 * 1024, mem_mb // 16)}m"
+
+
 def get_spark(
     app_name: str = "mapping_analysis_spark",
     cpus: int | None = None,
@@ -38,6 +56,7 @@ def get_spark(
     # and skew is handled by explicit salting, those round-trips are pure
     # serial floor (measured: ~2-3× the job count on the ER pipeline).
     aqe = os.environ.get("SPARK_GRAFT_AQE", "true").lower() != "false"
+    heap, offheap = default_memory()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -72,8 +91,9 @@ def get_spark(
         # sized for cpus × per-task buffers. 16g with 32 binary-payload scan
         # tasks GC-thrashed the whole stage (measured 6× slower than
         # local[8]); 64g gives 32 slots ~2 GB each, matching a real
-        # executor's per-core budget
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        # executor's per-core budget. Smaller hosts get a fifth of their
+        # RAM (default_memory)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", heap))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # binary-payload scans (audio `bytes` ~0.1-0.6 MB/row) allocate
@@ -84,7 +104,7 @@ def get_spark(
         # batch; 1024 rows bounds in-flight memory to ~150 MB/task
         .config("spark.sql.columnVector.offheap.enabled", "true")
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", "32g"))
+        .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", offheap))
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
     )
     for k, v in (extra_conf or {}).items():

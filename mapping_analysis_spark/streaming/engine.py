@@ -53,9 +53,10 @@ from pyspark.sql import functions as F
 
 from ..pipeline import PipelineConfig, prepare
 from ..operators.clustering import (
-    ClusterRoundConfig,
+    LSH_BANDS,
+    LSH_ROWS_PER_BAND,
+    LSH_SEED,
     _cluster_state,
-    iterative_max_both_clustering,
 )
 
 
@@ -253,10 +254,11 @@ class StreamingERJob:
         return self._write_checked(rows, self.fs.join(droot, "rows")), removed
 
     def _write_full(self, state: DataFrame, batch_id: int) -> None:
-        """Compaction: write the fully reconstructed state (uncommitted)."""
+        """Compaction: write the fully reconstructed state (uncommitted),
+        with the same empty-plan guard as the delta writes."""
         path = self.fs.join(self.cfg.state_dir, f"v={batch_id}")
         self.fs.rmtree(path)
-        state.write.mode("overwrite").parquet(path)
+        self._write_checked(state, path)
 
     def _verify_success_markers(self, batch_id: int, compacted: bool) -> None:
         """Fail LOUDLY at commit time if the data ``_SUCCESS`` markers that
@@ -334,16 +336,13 @@ class StreamingERJob:
                     )
 
     @staticmethod
-    def _band_keys_expr(rcfg: ClusterRoundConfig):
+    def _band_keys_expr():
         """LSH band keys of the cluster label's trigram set (the state's
         secondary index for affected-cluster lookup)."""
         from ..operators.blocking import minhash_band_keys
 
         return minhash_band_keys(
-            F.col("trigram_set"),
-            rcfg.lsh_bands,
-            rcfg.lsh_rows_per_band,
-            rcfg.lsh_seed,
+            F.col("trigram_set"), LSH_BANDS, LSH_ROWS_PER_BAND, LSH_SEED
         )
 
     # -- band-key index versioning ------------------------------------------
@@ -389,18 +388,6 @@ class StreamingERJob:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        _dbg = os.environ.get("SPARK_GRAFT_DEBUG_BATCH")
-        _tp = time.time()
-
-        def _phase(name: str) -> None:
-            nonlocal _tp
-            if _dbg:
-                print(
-                    f"[batch {batch_id}] {name}: {time.time() - _tp:.1f}s",
-                    flush=True,
-                )
-            _tp = time.time()
-
         cfg = self.cfg
         pcfg = cfg.pipeline
         # df.observe piggybacks input-row count, event-time high-water mark
@@ -439,7 +426,6 @@ class StreamingERJob:
             )
         prepared = prepare(on_time, pcfg).persist()
         prepared.count()  # one action: scan + fingerprints + observation
-        _phase("scan+fingerprint+cache")
         observed = obs.get
         n_in = int(observed["rows"] or 0)
         if n_in == 0:
@@ -455,14 +441,8 @@ class StreamingERJob:
         # ---- load state of AFFECTED clusters only: same prefix blocking
         # key OR any shared LSH band key (so a new clip can bridge into a
         # state cluster whose prefix key diverged)
-        rcfg = ClusterRoundConfig(
-            min_sim=pcfg.min_sim,
-            max_sources=pcfg.max_sources,
-            max_block_rows=pcfg.max_block_rows,
-            use_audio=pcfg.use_audio,
-        )
-        arrivals = _cluster_state(prepared, rcfg.use_audio)
-        band_expr = self._band_keys_expr(rcfg)
+        arrivals = _cluster_state(prepared, pcfg.use_audio)
+        band_expr = self._band_keys_expr()
         state = self._load_state(batch_id)
         index_rebuilt = False
         if state is not None:
@@ -501,9 +481,7 @@ class StreamingERJob:
         # converges to the batch result for the same input
         from ..operators.clustering import cluster_rounds
 
-        _phase("state-join-plan")
-        clusters = cluster_rounds(working, rcfg)
-        _phase("cluster-rounds(decomposition)")
+        clusters = cluster_rounds(working, pcfg)
         clusters_with_bands = clusters.withColumn("band_keys", band_expr)
         # ---- delta state write: only this batch's updated clusters plus
         # the tombstones of the state rows pulled into the working set —
@@ -515,7 +493,6 @@ class StreamingERJob:
             else arrivals.select("id").limit(0)
         )
         new_rows, removed = self._write_delta(clusters_with_bands, tomb, batch_id)
-        _phase("merge+delta-write")
         # cluster-count bookkeeping rides the commit markers: total' =
         # total − |tombstones| + |new rows|. Counts come from the
         # just-written parquet FOOTERS (driver-side metadata read, no
@@ -558,7 +535,6 @@ class StreamingERJob:
                 else state.join(removed, "id", "left_anti").unionByName(new_rows)
             )
             self._write_full(full, batch_id)
-            _phase("compaction-write")
         # ---- exactly-once sink: overwrite THIS batch's partition only.
         # The output rows ARE the just-written delta rows, so publishing is
         # a filesystem copy (hardlink locally, FileUtil.copy on Hadoop FS)
@@ -569,7 +545,6 @@ class StreamingERJob:
         out_path = self.fs.join(cfg.output_dir, f"batch_id={batch_id}")
         self.fs.rmtree(out_path)
         self.fs.copytree(self.fs.join(droot, "rows"), out_path)
-        _phase("output-write")
 
         # ---- state commit + watermark + lineage
         self._commit_state(batch_id, compacted, n_clusters)
@@ -589,7 +564,6 @@ class StreamingERJob:
         )
         part_counts.write.mode("overwrite").parquet(lineage_path)
         prepared.unpersist()
-        _phase("lineage+commit")
 
     # -- query lifecycle ---------------------------------------------------
 

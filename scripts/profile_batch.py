@@ -37,7 +37,6 @@ def main() -> None:
     cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 16
     ensure_corpus()
     _isolate_shared_disk(cpus)
-    os.environ.setdefault("SPARK_GRAFT_DEBUG_BATCH", "1")
     os.environ.setdefault("SPARK_GRAFT_DEBUG_CC", "1")
 
     from pyspark.sql import functions as F

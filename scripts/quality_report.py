@@ -197,7 +197,6 @@ def main() -> None:
 
     from mapping_analysis_spark.datagen.clips import clips_spark_df
     from mapping_analysis_spark.operators.clustering import (
-        ClusterRoundConfig,
         _cluster_state,
         cluster_rounds,
     )
@@ -217,7 +216,6 @@ def main() -> None:
     t0 = time.time()
     clips = clips_spark_df(spark, n_clusters, seed=seed).persist()
     pcfg = PipelineConfig(min_sim=0.7)
-    rcfg = ClusterRoundConfig(min_sim=pcfg.min_sim, max_sources=pcfg.max_sources)
 
     gold = prepare(clips, pcfg).select("id", "gold_cluster").persist()
 
@@ -238,7 +236,7 @@ def main() -> None:
         bt = time.time()
         arrivals = _cluster_state(prepare(batch.drop("gold_cluster"), pcfg), True)
         if state is None:
-            state = materialize(cluster_rounds(arrivals, rcfg))
+            state = materialize(cluster_rounds(arrivals, pcfg))
         elif "source addition" in name:
             state = materialize(
                 source_addition_clustering(
@@ -251,7 +249,7 @@ def main() -> None:
             )
         else:
             state = materialize(
-                cluster_rounds(state.unionByName(arrivals), rcfg)
+                cluster_rounds(state.unionByName(arrivals), pcfg)
             )
         steps.append((name, batch.count(), state.count(), round(time.time() - bt, 1)))
 

@@ -182,6 +182,28 @@ def test_jaro_winkler_py():
     assert jaro_winkler_py("abc", "xyz") == 0.0
 
 
+@pytest.mark.parametrize(
+    "x,expected",
+    [
+        (0.1234564, 0.123456),
+        (1 / 3, 0.333333),
+        # 6dp midpoints round half-UP (Python's round is half-to-even and
+        # gives 0.0 / 0.123456 / 0.5 here)
+        (0.0000005, 0.000001),
+        (0.1234565, 0.123457),
+        (0.5000005, 0.500001),
+        (0.9999995, 1.0),
+    ],
+)
+def test_round6_half_up_ties(x, expected):
+    from mapping_analysis_spark.functions.local_sim import (
+        round6_half_up,
+        round_half_up,
+    )
+
+    assert round6_half_up(x) == expected == round_half_up(x, 6)
+
+
 def test_artist_title_album(spark):
     df = spark.createDataFrame(
         [("a", " Daniel Balavoine - L'enfant", "De vous"), ("no_value", "T", "--")],

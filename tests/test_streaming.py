@@ -14,6 +14,7 @@ from mapping_analysis_spark.datagen.clips import clips_spark_df
 from mapping_analysis_spark.pipeline import PipelineConfig, run_batch
 from mapping_analysis_spark.streaming.engine import StreamingERConfig, StreamingERJob
 
+
 N_CLUSTERS = 60
 
 
@@ -260,6 +261,66 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert len(members) == 2  # a1 + b2; b1 dropped
 
 
+def test_empty_tombstone_delta_and_empty_snapshot_read_back(spark, tmp_path):
+    """A batch that touches no state cluster writes its tombstones from an
+    EMPTY plan. Depending on the Spark build and committer, such a write
+    can leave a parquet dir with no part file (Spark 4.1 writes one empty
+    part); either way the state writes (delta and compaction alike) must
+    leave a schema-bearing file, so ``_load_state`` / ``final_state()``
+    read the chain back."""
+    import pandas as pd
+    from datetime import datetime, timezone
+
+    from mapping_analysis_spark.schema import CLIPS_SCHEMA
+
+    t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
+
+    def batch(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                [
+                    {
+                        "clip_id": cid, "bytes": None, "sr_hz": 8000,
+                        "dur_ms": 1000, "codec": "pcm_s16le",
+                        "transcript": text, "source": src, "event_time": t0,
+                    }
+                    for cid, text, src in rows
+                ]
+            ),
+            CLIPS_SCHEMA,
+        )
+
+    cfg = StreamingERConfig(
+        source_dir=str(tmp_path / "src"),
+        work_dir=str(tmp_path / "work"),
+        watermark_delay_sec=3600,
+        pipeline=PipelineConfig(min_sim=0.7, use_audio=False),
+    )
+    job = StreamingERJob(spark, cfg)
+    job.process_batch(
+        batch([("a1", "alpha beta gamma", "1"), ("a2", "alpha beta gamma", "2")]), 0
+    )
+    # no shared blocking key or band key with batch 0: nothing is touched
+    job.process_batch(batch([("z1", "zulu yankee xray", "1")]), 1)
+    assert job._state_entries() == [(0, "full"), (1, "delta")]
+    removed = os.path.join(cfg.state_dir, "d=1", "removed")
+    assert any(f.endswith(".parquet") for f in os.listdir(removed))
+    assert spark.read.parquet(removed).count() == 0
+
+    for state in (job._load_state(2), job.final_state()):
+        assert state.count() == 2
+        sizes = sorted(r.n_members for r in state.select("n_members").collect())
+        assert sizes == [1, 2]
+
+    # compaction of an empty plan: the snapshot still carries the schema
+    empty = job.final_state().limit(0)
+    job._write_full(empty, 9)
+    snap = os.path.join(cfg.state_dir, "v=9")
+    assert any(f.endswith(".parquet") for f in os.listdir(snap))
+    back = spark.read.parquet(snap)
+    assert back.count() == 0 and set(back.columns) == set(empty.columns)
+
+
 def test_native_window_ops_stream(spark, corpus, tmp_path):
     """Tumbling/sliding/session windows + stream-stream join run as real
     streaming queries on the clips file stream."""
@@ -406,7 +467,11 @@ def test_band_key_index_rebuild_on_format_change(spark, corpus, tmp_path):
         BAND_KEY_FORMAT,
         minhash_band_keys,
     )
-    from mapping_analysis_spark.operators.clustering import ClusterRoundConfig
+    from mapping_analysis_spark.operators.clustering import (
+        LSH_BANDS,
+        LSH_ROWS_PER_BAND,
+        LSH_SEED,
+    )
 
     source_dir, _ = corpus
     work = str(tmp_path / "w")
@@ -443,12 +508,11 @@ def test_band_key_index_rebuild_on_format_change(spark, corpus, tmp_path):
     assert job2._stored_band_format() == BAND_KEY_FORMAT
     # every persisted band_keys row equals a fresh recomputation from its
     # trigram set (i.e. the index is in the CURRENT format everywhere)
-    rcfg = ClusterRoundConfig(min_sim=0.7)
     state = job2.final_state()
     recomputed = state.withColumn(
         "_fresh",
         minhash_band_keys(
-            F.col("trigram_set"), rcfg.lsh_bands, rcfg.lsh_rows_per_band, rcfg.lsh_seed
+            F.col("trigram_set"), LSH_BANDS, LSH_ROWS_PER_BAND, LSH_SEED
         ),
     )
     bad = recomputed.filter(F.col("band_keys") != F.col("_fresh")).count()
